@@ -15,6 +15,13 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+DRIVER_MEMORY = "8g"
+# Parquet output codec (guide §6 baseline): zstd writes ~25%
+# smaller files than snappy at equal-or-better speed — measured
+# here on the lineitem round-trip: write 2.2 s -> 1.1 s, read
+# 0.6 s -> 0.3 s, 11 MB -> 8.3 MB. Scale-independent (zstd is
+# also the production recommendation); overridable via conf.
+PARQUET_CODEC = "zstd"
 
 
 def get_spark(app_name: str = "hadoop_fcfs_spark", master: str | None = None) -> SparkSession:
@@ -37,18 +44,10 @@ def get_spark(app_name: str = "hadoop_fcfs_spark", master: str | None = None) ->
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .config("spark.driver.memory", DRIVER_MEMORY)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # Parquet output codec (guide §6 baseline): zstd writes ~25%
-        # smaller files than snappy at equal-or-better speed — measured
-        # here on the lineitem round-trip: write 2.2 s -> 1.1 s, read
-        # 0.6 s -> 0.3 s, 11 MB -> 8.3 MB. Scale-independent (zstd is
-        # also the production recommendation); overridable via conf.
-        .config(
-            "spark.sql.parquet.compression.codec",
-            os.environ.get("SPARK_GRAFT_PARQUET_CODEC", "zstd"),
-        )
+        .config("spark.sql.parquet.compression.codec", PARQUET_CODEC)
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -67,33 +66,3 @@ def get_spark(app_name: str = "hadoop_fcfs_spark", master: str | None = None) ->
     except Exception:
         pass  # log4j2 API absent/renamed: cosmetic only, never fail startup
     return spark
-
-
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES) -> dict:
-    """Read the driver's parquet tables and register temp views.
-
-    Parquet scans give Catalyst pushdown + pruning for free; every query
-    module filters/projects before shuffling so the scan stays minimal.
-    """
-    dfs = {}
-    for name in names:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            df = spark.read.parquet(path)
-            df.createOrReplaceTempView(name)
-            dfs[name] = df
-    return dfs

@@ -53,6 +53,7 @@ import duckdb  # noqa: E402
 from hadoop_fcfs_spark.caching import release_waypoints  # noqa: E402
 from hadoop_fcfs_spark.registry import all_queries  # noqa: E402
 from hadoop_fcfs_spark.session import get_spark  # noqa: E402
+from hadoop_fcfs_spark.tables import TABLES  # noqa: E402
 
 BASE = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 WARMUP_SF = "/root/testdata/sf0.001"
@@ -71,10 +72,6 @@ QUERIES = [
     # cost is dominated by that single data-sized shuffle.
     "watermark_late_audit",
 ]
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
 RUNGS = (1, 4, 8)  # override with --rungs 1,4,8,16 (r8 verdict #4)
 
 ALPHA = "abcdefghijklmnopqrstuvwxyz"

@@ -47,20 +47,15 @@ def _canon_url_py(u: str) -> str:
 
 @pytest.fixture(scope="session")
 def spark():
-    # Fewer threads/partitions for test latency; prod default is env-driven.
-    s = get_spark("hadoop_fcfs_spark-tests", master="local[8]")
+    # One thread per shuffle partition: SPARK_GRAFT_CPUS (default 8 above)
+    # sets both, so the suite runs as wide as the host it is told about.
+    s = get_spark("hadoop_fcfs_spark-tests")
     yield s
 
 
 @pytest.fixture(scope="session")
 def duck():
-    import duckdb
+    from hadoop_fcfs_spark.verify import duck_views
 
-    con = duckdb.connect()
-    for name in (
-        "region nation customer supplier part orders lineitem events documents embeddings".split()
-    ):
-        path = os.path.join(SF_ORACLE, f"{name}.parquet")
-        if os.path.exists(path):
-            con.execute(f"CREATE OR REPLACE VIEW {name} AS SELECT * FROM read_parquet('{path}')")
-    yield con
+    with duck_views(SF_ORACLE) as con:
+        yield con

@@ -392,14 +392,15 @@ def test_as_of_join_basic_null_and_ties(spark):
 
 def test_wrapper_surface_smoke(spark, tmp_path):
     """Thin built-in wrappers (covered operators, uncovered entry points):
-    csv/orc round-trips, inverse, noop sink, records counter, load_tables
+    csv/orc round-trips, inverse, noop sink, records counter, register_views
     view registration, total_order_sort global ordering."""
     from hadoop_fcfs_spark.io.readers import read_csv, read_orc
     from hadoop_fcfs_spark.io.writers import write_noop
     from hadoop_fcfs_spark.metrics import records_counter
     from hadoop_fcfs_spark.ops.sort import total_order_sort
     from hadoop_fcfs_spark.ops.textops import inverse
-    from hadoop_fcfs_spark.session import load_tables
+    from hadoop_fcfs_spark.tables import TABLES, register_views
+    from tests.conftest import SF_SMOKE
 
     df = spark.createDataFrame([("a", 1), ("b", 2), ("c", 0)], "key string, value int")
     # csv round-trip
@@ -420,9 +421,8 @@ def test_wrapper_surface_smoke(spark, tmp_path):
     counted_df, obs = records_counter(df)
     counted_df.write.format("noop").mode("overwrite").save()
     assert obs.get["count"] == 3
-    # load_tables registers temp views readable via SQL
-    loaded = load_tables(spark, "/root/testdata/sf0.001", ("region", "nation"))
-    assert set(loaded) == {"region", "nation"}
+    # register_views registers temp views readable via SQL
+    assert register_views(spark, SF_SMOKE) == list(TABLES)
     assert spark.sql("SELECT COUNT(*) AS n FROM region").collect()[0]["n"] == 5
     # total order sort: globally ascending across partitions
     big = spark.range(0, 10_000).select((F.col("id") * 2654435761 % 1_000_003).alias("k"))
@@ -534,6 +534,10 @@ def test_cli_list_run_sql(spark, capsys, tmp_path):
 
     assert main(["sql", "SELECT COUNT(*) AS n FROM orders", "--sf", SF_SMOKE]) == 0
     assert "1500" in capsys.readouterr().out
+
+    # agreeing-empty is a pass at the smoke scale (hollow-gate exemption)
+    assert main(["verify", "volume_shipping", "--sf", SF_SMOKE]) == 0
+    assert "OK" in capsys.readouterr().out
 
     out = str(tmp_path / "sql_out")
     assert main(["sql", "SELECT o_orderkey FROM orders WHERE o_orderkey < 5",

@@ -1,37 +1,19 @@
 """Replicates the driver's correctness gate locally: run every registered
 query on Spark at sf0.01 and compare row-count + values against its DuckDB
 oracle (order-insensitive, column-name-sorted), mirroring the driver's
-CORRECTNESS check."""
+CORRECTNESS check. The comparison itself is ``hadoop_fcfs_spark.verify``,
+shared with the CLI ``verify`` command."""
 
 from __future__ import annotations
 
-import math
-
+import pandas as pd
 import pytest
 
 from hadoop_fcfs_spark.registry import all_queries
+from hadoop_fcfs_spark.verify import compare
 from tests.conftest import SF_ORACLE
 
 QUERIES = all_queries()
-
-
-def _normalize(rows, columns):
-    """Sort columns by name, canonicalize values, sort rows."""
-    order = sorted(range(len(columns)), key=lambda i: columns[i])
-
-    def canon(v):
-        if v is None:
-            return "∅"
-        if isinstance(v, float):
-            if math.isnan(v):
-                return "nan"
-            # cheap canonical form tolerant of float formatting differences
-            return f"{v:.6g}"
-        if isinstance(v, bytes):
-            return v.hex()
-        return str(v)
-
-    return sorted(tuple(canon(r[i]) for i in order) for r in rows)
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
@@ -43,33 +25,13 @@ def test_query_matches_oracle(name, spark, duck):
         assert len(sdf.collect()) >= 0  # rows-only smoke, mirrors driver's weak check
         return
 
-    # Go through pandas on BOTH sides, like the driver does: DuckDB HUGEINT
-    # (un-cast SUM of ints) becomes float64 in pandas while Spark stays int64 —
-    # fetchall() would hide that as Python ints (bit us in round 1:
-    # xml_records/interval_sample hash-mismatched only at the driver).
-    spark_pd = sdf.toPandas()
-    duck_pd = duck.execute(spec.oracle).df()
-    spark_cols = list(spark_pd.columns)
-    duck_cols = list(duck_pd.columns)
+    reason = compare(sdf.toPandas(), duck.execute(spec.oracle).df(), SF_ORACLE)
+    assert reason is None, f"{name}: {reason}"
 
-    assert sorted(spark_cols) == sorted(duck_cols), f"{name}: column names differ"
-    assert len(spark_pd) == len(duck_pd), f"{name}: row count {len(spark_pd)} vs {len(duck_pd)}"
-    # hollow-gate guard: matching EMPTY results would be green while
-    # verifying nothing (a filter on a value absent from the synthetic
-    # data did this once — SURVEY r4 gotcha); every gate must produce
-    # rows AT THE DRIVER'S SF AND ABOVE. At the sf0.001 smoke scale two
-    # gates (volume_shipping, frequent_brand_triples) are legitimately
-    # below their filters' data threshold — agreeing-empty is still a
-    # valid parity pass there, so the guard keys on the SF dir.
-    if not SF_ORACLE.rstrip("/").endswith("sf0.001"):
-        assert len(spark_pd) > 0, f"{name}: gate returns 0 rows — hollow"
-    for c in sorted(spark_cols):
-        sk, dk = spark_pd[c].dtype.kind, duck_pd[c].dtype.kind
-        assert sk == dk, f"{name}: dtype kind differs for {c!r}: spark={spark_pd[c].dtype} duck={duck_pd[c].dtype}"
-    spark_rows = list(spark_pd.itertuples(index=False, name=None))
-    duck_rows = list(duck_pd.itertuples(index=False, name=None))
-    a = _normalize(spark_rows, spark_cols)
-    b = _normalize(duck_rows, duck_cols)
-    if a != b:
-        diff = [(x, y) for x, y in zip(a, b) if x != y][:5]
-        raise AssertionError(f"{name}: value mismatch, first diffs: {diff}")
+
+def test_compare_judges_kind_and_canonical_floats():
+    """An int column against the same digits as strings is a mismatch
+    (dtype kind); float noise below 6 significant digits is not."""
+    ints, strs = pd.DataFrame({"k": [1, 2]}), pd.DataFrame({"k": ["1", "2"]})
+    assert "dtype kind" in compare(ints, strs, "sf0.01")
+    assert compare(pd.DataFrame({"x": [0.1 + 0.2]}), pd.DataFrame({"x": [0.3]}), "sf0.01") is None
